@@ -22,51 +22,82 @@ from msgvault_spark.catalog import CATALOG
 # exceeds 50, all 50 slots go to touched entries and the overflow relies
 # on the out-of-band full-oracle sweep until its next window.
 _PRIORITY = [
-    # --- round 12 gate window (50 slots). Composition, in order:
-    # (1) the mid-build narrow changes (promote_generation hardening in
-    #     embeddings_pipeline.py; the NEW ivfpq_knn_seed0 +
-    #     ivfpq_recall_report entries in catalog_ann.py);
-    # (2) the r12 OPTIMIZATION-round narrow changes — every entry whose
-    #     plan was restructured this round (tfidf/backoff rewrites, the
-    #     ILIKE→lowered-contains compilation, simhash integer-shift
-    #     votes, the wide recipient-blob columns). Results are
-    #     hash-identical (proven against the oracle at sf0.001/0.01/0.1
-    #     in-round) but gate_priority must_verify fronts them;
-    # (3) the r2/r3-vintage rotation cohort (r11 verdict task #3)
-    #     filling the remaining slots; the r5-vintage tail the
-    #     optimization entries displaced queues first in overflow for
-    #     the r13 window.
-    # The full sf0.01 oracle sweep re-verified all 223 entries
-    # out-of-band on this round's tree. ---
-    "embed_pipeline_vectors",
-    "ivfpq_knn_seed0",
-    "ivfpq_recall_report",
-    # r12 optimization-round narrow changes (gate_priority must_verify):
-    # plan restructures keep results hash-identical but must re-verify
-    "tfidf_top_terms",
-    "bigram_backoff_quality",
-    "doremi_weight_update",
-    # the ILIKE→lowered-contains compilation (functions/text.py) touches
-    # every search-path entry
-    "search_fast_recipients_wide",
-    "search_fast_operators_wide",
+    # --- gate window (50 slots) for the session-cache registry change.
+    # Composition, in order:
+    # (1) every entry a narrow change touched (gate_priority
+    #     must_verify): the catalog_search, catalog_ann and catalog_dedup
+    #     memos moved into the sources/cache.py registry;
+    # (2) the stream entries, touched by the stream-pool comment in
+    #     streaming/incremental.py — among them the four r13 entries
+    #     that had no driver row since their change;
+    # (3) pmi_collocations, the fifth such r13 entry;
+    # (4) one entry touched by the broad registry change (sources/cache.py
+    #     reaches 218 entries), filling the last slot. ---
     "search_fast_operators",
     "search_text_terms",
+    "bm25_documents",
+    "bm25_fts5_documents",
+    "knn_cosine_seed0",
+    "hybrid_rrf",
+    "ann_ivf_seed0",
+    "pq_knn_seed0",
+    "hybrid_rrf_filtered",
+    "bm25_prefix_documents",
+    "quantized_knn_seed0",
+    "sq8_rerank_knn",
+    "phrase_search_docs",
     "search_relative_dates",
+    "bm25_phrase_documents",
+    "dedup_exact_survivors",
+    "dedup_merge_labels",
+    "dedup_content_hash",
+    "minhash_lsh_near_dups",
+    "lsh_capped_hot_bucket",
+    "lsh_hot_bucket_stats",
+    "simhash_fingerprints",
+    "embedding_near_dups",
+    "text_profile_docs",
+    "ngram_jaccard_pairs",
+    "dv_survivor_counts",
+    "winnow_substring_pairs",
+    "dedup_line_segments",
+    "tfidf_top_terms",
+    "minhash_incremental_pairs",
+    "fuzzy_dedup_survivors",
+    "quality_dedup_survivors",
+    "unigram_quality_docs",
+    "semantic_dedup_cells",
+    "cross_source_dup_report",
+    "kmv_source_overlap",
+    "simhash_hamming_pairs",
+    "ivf_recall_report",
+    "pq_recall_report",
+    "ivf_probe_sweep",
+    "cluster_balanced_sample",
+    "ivfpq_recall_report",
+    "ivfpq_knn_seed0",
+    # stream-pool comment (streaming/incremental.py) + r13 rotation
+    "stream_rollup_daily",
+    "stream_dedup_count",
+    "stream_user_sessions",
+    "stream_stream_join_funnel",
+    "stream_static_enrich",
+    # r13 rotation: no driver row since its change
+    "pmi_collocations",
+    # broad registry change (sources/cache.py)
+    "embed_pipeline_vectors",
+    # --- overflow (out-of-band full-oracle sweep; driver rows in
+    #     later windows): the prior order, entries fronted above
+    #     removed ---
+    "bigram_backoff_quality",
+    "doremi_weight_update",
+    "search_fast_recipients_wide",
+    "search_fast_operators_wide",
     "list_messages_by_domain",
     "list_messages_by_domain_wide",
     "search_with_stats",
     "search_page2",
     "search_by_domains",
-    # simhash integer-shift bit votes (dedup/simhash.py)
-    "simhash_fingerprints",
-    "simhash_hamming_pairs",
-    # ngram prefix-filter df via window (dedup/ngram.py, r12)
-    "ngram_jaccard_pairs",
-    # level-2 memory recovery (r12): checkpoint-unpersist discipline in
-    # connected_components and pagerank — narrow changes, must re-verify
-    "fuzzy_dedup_survivors",
-    "quality_dedup_survivors",
     "dedup_component_sizes",
     "pagerank_dup_graph",
     "bloom_join_orders",
@@ -83,7 +114,6 @@ _PRIORITY = [
     "salted_priority_rollup",
     "shipping_priority_q3",
     "snapshot_merge_timetravel",
-    "stream_rollup_daily",
     "temperature_mix_sources",
     "train_val_test_split",
     "customer_distribution_q13",
@@ -113,32 +143,11 @@ _PRIORITY = [
     "profile_orders_table",
     "returned_items_q10",
     "rp_project_embeddings",
-    # --- overflow (out-of-band full-oracle sweep; driver rows in
-    #     later rounds), prior order preserved; the r5-vintage tail
-    #     displaced by the r12 narrow-change entries queues first ---
     "skew_report_orders",
     "sliding_window_events",
     "snapshot_diff_versions",
-    "stream_dedup_count",
-    "stream_stream_join_funnel",
     "semantic_decontaminate_docs",
     "decontaminate_docs",
-    "dedup_exact_survivors",
-    "dedup_merge_labels",
-    "dedup_content_hash",
-    "minhash_lsh_near_dups",
-    "lsh_capped_hot_bucket",
-    "lsh_hot_bucket_stats",
-    "embedding_near_dups",
-    "text_profile_docs",
-    "dv_survivor_counts",
-    "winnow_substring_pairs",
-    "dedup_line_segments",
-    "minhash_incremental_pairs",
-    "unigram_quality_docs",
-    "semantic_dedup_cells",
-    "cross_source_dup_report",
-    "kmv_source_overlap",
     "embedding_near_dups_lsh",
     "pricing_summary",
     "top_customers_by_spend",
@@ -164,30 +173,15 @@ _PRIORITY = [
     "incremental_agg_orders",
     "percentiles_order_price",
     "scd2_customer_priority",
-    "bm25_documents",
-    "knn_cosine_seed0",
-    "hybrid_rrf",
-    "ann_ivf_seed0",
-    "hybrid_rrf_filtered",
-    "bm25_prefix_documents",
-    "pq_knn_seed0",
-    "phrase_search_docs",
     "asof_events_orders",
-    "quantized_knn_seed0",
-    "sq8_rerank_knn",
-    "bm25_phrase_documents",
     "media_resize_plan",
     "media_frame_sample",
     "ann_recall_report",
-    "ivf_recall_report",
     "sq8_recall_report",
-    "pq_recall_report",
     "token_budget_mix_plan",
-    "ivf_probe_sweep",
     "dsir_importance_select",
     "length_bucket_report",
     "quality_median_filter",
-    "cluster_balanced_sample",
     "source_divergence_matrix",
     "curriculum_decile_plan",
     "bpe_merge_candidates",
@@ -203,7 +197,6 @@ _PRIORITY = [
     "dup_position_profile",
     "unimax_budget_plan",
     "rfm_segments",
-    "bm25_fts5_documents",
     "ndcg_eval_knn",
     "bpe_train_merges",
     "bpe_trained_fertility",
@@ -246,12 +239,10 @@ _PRIORITY = [
     "get_attachments_batch",
     "gmail_ids_by_filter",
     "summary_stats",
-    "stream_user_sessions",
     "weighted_mix_sources",
     "topk_orders_per_priority",
     "top_bigrams_corpus",
     "label_dispersion_report",
-    "stream_static_enrich",
     "small_quantity_revenue_q17",
     "large_orders_q18",
     "min_cost_supplier_q2",
@@ -268,7 +259,6 @@ _PRIORITY = [
     "boilerplate_prefixes",
     "length_mad_outliers",
     "volume_anomaly_days",
-    "pmi_collocations",
     "weighted_sample_sources",
     "lsh_band_recall_sweep",
     "redact_pii_docs",

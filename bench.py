@@ -93,15 +93,16 @@ def main() -> None:
 
     # cold path: same queries with the prepared-plan memo dropped each run,
     # so plan construction (Py4J expression building + Catalyst analysis/
-    # optimization + whole-stage codegen compile) is INSIDE the measurement
-    # — the number the plan cache cannot mask. ETL artifacts (persisted
-    # archive/wide/index caches) stay warm: they are build-cache products,
-    # not per-query work. Honest floor: a freshly built plan never hits
-    # Spark's codegen cache (new expr-ids → new generated source), so each
-    # cold query pays ~0.5-0.8s of one-time compile on this machine —
-    # that's the serving-engine argument FOR the prepared-plan cache, and
-    # it amortizes away in any real deployment (per-plan, not per-row:
-    # at 100 TB it is noise; only a 24-tiny-queries loop makes it visible).
+    # optimization/planning) is INSIDE the measurement — the number the
+    # plan cache cannot mask. ETL artifacts (persisted archive/wide/index
+    # caches) stay warm: they are build-cache products, not per-query
+    # work. The cold premium is Spark jobs, not codegen: a rebuilt plan
+    # generates byte-identical source and hits the codegen cache (0
+    # recompiles measured), but a fresh plan re-runs its broadcast and
+    # exchange jobs and full map stages that a memoized plan reuses. That
+    # is the serving-engine argument FOR the prepared-plan cache, and it
+    # amortizes away in any real deployment (per-plan, not per-row: at
+    # 100 TB it is noise; only a 24-tiny-queries loop makes it visible).
     from msgvault_spark import catalog as catmod
 
     cold: dict[str, float] = {}

@@ -319,29 +319,16 @@ def clear_session_caches(spark: SparkSession) -> int:
     """Memory-pressure recovery LEVEL 2 — cold-restart-without-process-
     restart. shed_plan_cache() (level 1) frees plan-private broadcasts,
     but a marathon session's residual heap is the long-lived serving
-    caches: the persisted archive/wide/table/index/artifact memos plus
-    per-catalog-module index memos (PQ codes, SemDeDup cells, IVF-PQ).
-    Drop them ALL — every getter rebuilds lazily from the artifact lake
-    on next use — sweep any remaining cached relation, and ask the JVM
-    for a full GC so the freed blocks are actually available to the next
-    broadcast build. Returns memo entries dropped (plans + caches)."""
-    dropped = shed_plan_cache()
-    from msgvault_spark.sources import cache as srccache
+    caches: every frame-holding entry of the session-cache registry
+    (sources/cache.py — archive/wide/table/index/artifact frames, PQ
+    codes, SemDeDup cells, IVF-PQ). Drop them ALL — every getter rebuilds
+    lazily from the artifact lake on next use — sweep any remaining
+    cached relation, and ask the JVM for a full GC so the freed blocks
+    are actually available to the next broadcast build. Returns entries
+    dropped (plans + caches)."""
+    from msgvault_spark.sources.cache import clear_serving_caches
 
-    dropped += srccache.clear_serving_caches()
-    # per-module index memos living outside sources/cache.py
-    for modname, dictname in (
-        ("msgvault_spark.catalog_search", "_PQ_MEMO"),
-        ("msgvault_spark.catalog_dedup", "_SEMDEDUP_IDX_MEMO"),
-        ("msgvault_spark.catalog_ann", "_IVFPQ_MEMO"),
-    ):
-        mod = sys.modules.get(modname)
-        memo = getattr(mod, dictname, None) if mod else None
-        if memo:
-            for v in memo.values():
-                srccache._unpersist_tree(v)
-            dropped += len(memo)
-            memo.clear()
+    dropped = shed_plan_cache() + clear_serving_caches()
     # streaming one-shot pools: memory-sink views (driver-held rows), the
     # footer-probe memo and the tmpfs checkpoint root — all rebuild lazily
     try:
@@ -401,14 +388,17 @@ def run_with_memory_recovery(spark: SparkSession, attempt, label: str = "query")
         threshold and keep their (small, bounded) builds.
 
     Non-memory errors propagate immediately at every level.  ``label``
-    names the work in the recovery log lines (stdout, one per level)."""
+    names the work in the recovery log lines (stderr, one per level)."""
     try:
         return attempt()
     except Exception as e:  # noqa: BLE001
         if not is_memory_pressure_error(e):
             raise
         shed = shed_plan_cache()
-        print(f"  [{label}] memory pressure: shed {shed} plans, retry")
+        print(
+            f"  [{label}] memory pressure: shed {shed} plans, retry",
+            file=sys.stderr,
+        )
         try:
             return attempt()
         except Exception as e2:  # noqa: BLE001
@@ -417,7 +407,8 @@ def run_with_memory_recovery(spark: SparkSession, attempt, label: str = "query")
             cleared = clear_session_caches(spark)
             print(
                 f"  [{label}] still under pressure: cleared {cleared}"
-                f" session caches, retry (level 2)"
+                f" session caches, retry (level 2)",
+                file=sys.stderr,
             )
             try:
                 return attempt()
@@ -445,7 +436,8 @@ def run_with_memory_recovery(spark: SparkSession, attempt, label: str = "query")
                     spark.conf.set(key, "-1")
                     print(
                         f"  [{label}] still under pressure: auto-broadcast"
-                        f" disabled for one retry (level 3)"
+                        f" disabled for one retry (level 3)",
+                        file=sys.stderr,
                     )
                     try:
                         return attempt()

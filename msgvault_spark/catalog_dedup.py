@@ -21,6 +21,7 @@ from msgvault_spark.dedup.simhash import simhash, simhash_oracle_sql
 from msgvault_spark.sources.adapter import oracle
 from msgvault_spark.sources.cache import get_archive
 from msgvault_spark.sources.cache import get_table as load_table
+from msgvault_spark.sources.cache import memo
 from msgvault_spark.textstats.analysis import text_profile
 
 
@@ -1035,9 +1036,6 @@ def unigram_quality_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-_SEMDEDUP_IDX_MEMO: dict = {}
-
-
 def _semdedup_oracle() -> str:
     from msgvault_spark.dedup.semdedup import semdedup_oracle_sql
 
@@ -1064,18 +1062,17 @@ def semantic_dedup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the cell assignment is an ETL artifact (persisted, like the ANN
     # indexes) — without it the centroid cross-join subplan re-executes
     # for each of the three branches reading the index
-    key = (spark.sparkContext.applicationId, sf_dir, "semdedup_idx", 8)
-    if key not in _SEMDEDUP_IDX_MEMO:
+    def build():
         from pyspark import StorageLevel
 
         idx = build_ivf_index(emb, n_cells=8).persist(
             StorageLevel.MEMORY_AND_DISK
         )
         idx.count()
-        _SEMDEDUP_IDX_MEMO[key] = idx
-    return semantic_dedup_summary(
-        semantic_dedup(threshold=0.4, index=_SEMDEDUP_IDX_MEMO[key])
-    )
+        return idx
+
+    idx = memo(spark, ("semdedup_index", sf_dir, 8), build)
+    return semantic_dedup_summary(semantic_dedup(threshold=0.4, index=idx))
 
 
 # ---------------------------------------------------------------------------

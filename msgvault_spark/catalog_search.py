@@ -18,6 +18,7 @@ from msgvault_spark.search.hybrid import hybrid_search
 from msgvault_spark.sources.adapter import oracle
 from msgvault_spark.sources.cache import get_archive
 from msgvault_spark.sources.cache import get_table as load_table
+from msgvault_spark.sources.cache import memo
 
 _MS_CTE = """
 ms AS (
@@ -39,9 +40,6 @@ _EMAIL_ONLY = (
 )
 
 
-_SEED_MEMO: dict[tuple, list] = {}
-
-
 def _normed_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized normed-embeddings ETL artifact (vec_id, emb_d, emb_norm) —
     what a real vector index stores next to the raw vectors; per-query
@@ -59,12 +57,13 @@ def _normed_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _seed_vector(spark: SparkSession, sf_dir: str, vec_id: int) -> list:
     """Memoized seed-embedding lookup (the query input for find-similar);
     saves a point-lookup job per query on repeated seeds."""
-    key = (spark.sparkContext.applicationId, sf_dir, vec_id)
-    if key not in _SEED_MEMO:
+
+    def build():
         emb = load_table(spark, sf_dir, "embeddings")
         row = emb.filter(F.col("vec_id") == vec_id).select("embedding").head()
-        _SEED_MEMO[key] = list(row[0])
-    return _SEED_MEMO[key]
+        return list(row[0])
+
+    return memo(spark, ("seed_vector", sf_dir, vec_id), build)
 
 
 @register(
@@ -365,14 +364,12 @@ from msgvault_spark.similarity.pq import (  # noqa: E402
     pq_search,
 )
 
-_PQ_MEMO: dict[tuple, object] = {}
-
 
 def get_pq_index(spark: SparkSession, sf_dir: str):
     """Memoized PQ ETL artifacts: (codebooks, persisted codes table) —
     kilobytes of driver-side codewords plus the pure-map m-byte encode."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PQ_MEMO:
+
+    def build():
         from pyspark import StorageLevel
 
         emb = load_table(spark, sf_dir, "embeddings")
@@ -381,8 +378,9 @@ def get_pq_index(spark: SparkSession, sf_dir: str):
             StorageLevel.MEMORY_AND_DISK
         )
         codes.count()
-        _PQ_MEMO[key] = (books, codes)
-    return _PQ_MEMO[key]
+        return books, codes
+
+    return memo(spark, ("pq_index", sf_dir), build)
 
 
 @register("pq_knn_seed0", pq_oracle_sql(0, k=10, m=4, n_codes=16, dim=64))

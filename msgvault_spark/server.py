@@ -477,9 +477,11 @@ def serve(
     With ``prewarm`` (default), spare driver threads Catalyst-compile the
     headline catalog plans while the server answers its first requests
     (serving.prewarm_plans) — the reference's prepared-statement warm-up
-    on its pooled connection (internal/query/duckdb.go:91-99); by the
-    time a route needs a plan it is usually a memo hit. The handle is on
-    ``.prewarm_handle`` (None when disabled) for tests/barriers."""
+    on its pooled connection (internal/query/duckdb.go:91-99). No route
+    serves a prewarmed catalog plan: routes build their own plans, so
+    what the prewarm shares with them is the warmed JVM and the session
+    caches the plans loaded. The handle is on ``.prewarm_handle`` (None
+    when disabled) for tests/barriers."""
     srv = MsgvaultHTTPServer(
         spark, sf_dir, host=host, port=port, api_key=api_key,
         raw_store=raw_store,

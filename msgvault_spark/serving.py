@@ -8,8 +8,8 @@ removable, but it IS overlappable: a serving process answers queries on
 one thread while spare driver threads build and Catalyst-compile the rest
 of the catalog. PySpark's driver API is thread-safe (each Python thread
 drives its own Py4J connection), the plan memo is a lock-guarded LRU
-(catalog._PLAN_MEMO_LOCK), and the lake getters are single-flight
-(sources/cache._MEMO_LOCK), so a prewarmed plan is simply a memo hit by
+(catalog._PLAN_MEMO_LOCK), and the lake getters are single-flight per
+key (sources/cache.memo), so a prewarmed plan is simply a memo hit by
 the time a user asks for it.
 
 The reference has the same feature in spirit: its pooled DuckDB

@@ -37,7 +37,6 @@ the fast path for the (overwhelmingly common) single-sender case.
 
 from __future__ import annotations
 
-import functools
 import threading
 
 from pyspark import StorageLevel
@@ -46,31 +45,41 @@ from pyspark.sql import functions as F
 
 from msgvault_spark.sources.adapter import build_archive
 
-_ARCHIVE_MEMO: dict[tuple[str, str], dict[str, DataFrame]] = {}
-_WIDE_MEMO: dict[tuple[str, str], DataFrame] = {}
-
 FACT_PARTITIONS = 16
 
-# serving.prewarm_plans builds catalog plans on background driver threads;
-# the memoized getters below must not double-build (wasted jobs, and a
-# losing thread's persisted dims would stay pinned unreferenced). One
-# reentrant lock around each getter: with a warm lake the held section is
-# metadata-only (registration + footer reads); builds serialize, which is
-# exactly the single-flight behavior a stale store needs.
-_MEMO_LOCK = threading.RLock()
+# The session-cache registry: every long-lived session cache of the
+# package (archive/wide/table frames, FTS and ANN indexes, derived
+# artifacts, scalar statistics, seed vectors) is one entry keyed
+# (applicationId, namespace, *key), filled by memo(). HTTP handler threads
+# and serving.prewarm_plans call the getters concurrently, so memo() is
+# single-flight per key: a hit takes only the short registry lock, and a
+# build runs under its own key's lock, so a seconds-long index build never
+# blocks hits or builds of other keys, while a key is never built twice (a
+# losing thread's persisted frames would stay pinned unreferenced). Builds
+# nest (the wide view builds on the archive) but never cyclically.
+_REGISTRY: dict[tuple, object] = {}
+_REGISTRY_LOCK = threading.Lock()
+_BUILD_LOCKS: dict[tuple, threading.Lock] = {}
 
 
-def _locked(fn):
-    @functools.wraps(fn)
-    def inner(*a, **kw):
-        with _MEMO_LOCK:
-            return fn(*a, **kw)
-
-    return inner
-
-
-def _key(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    return (spark.sparkContext.applicationId, sf_dir)
+def memo(spark: SparkSession, key: tuple, build):
+    """The value cached under (applicationId, *key), where ``key`` starts
+    with its namespace; on a miss ``build()`` runs once, however many
+    threads ask for the key at the same time."""
+    full = (spark.sparkContext.applicationId, *key)
+    with _REGISTRY_LOCK:
+        if full in _REGISTRY:
+            return _REGISTRY[full]
+        build_lock = _BUILD_LOCKS.setdefault(full, threading.Lock())
+    with build_lock:
+        with _REGISTRY_LOCK:
+            if full in _REGISTRY:
+                return _REGISTRY[full]
+        value = build()
+        with _REGISTRY_LOCK:
+            _REGISTRY[full] = value
+            _BUILD_LOCKS.pop(full, None)
+    return value
 
 
 # write-time co-partitioning spec: each fact clustered on its join key
@@ -82,7 +91,6 @@ _ARCHIVE_BUCKETS: dict[str, tuple[str, int]] = {
 }
 
 
-@_locked
 def get_archive(
     spark: SparkSession, sf_dir: str, *, materialize: bool = True
 ) -> dict[str, DataFrame]:
@@ -92,17 +100,22 @@ def get_archive(
     write-time property — serving sessions register the stored bucketed
     directories and scan them, paying nothing up front. The in-session
     repartition+persist fallback survives only for store-disabled runs."""
+    return memo(
+        spark,
+        ("archive", sf_dir),
+        lambda: _build_archive(spark, sf_dir, materialize),
+    )
+
+
+def _build_archive(
+    spark: SparkSession, sf_dir: str, materialize: bool
+) -> dict[str, DataFrame]:
     from msgvault_spark.sources import artifact_store
 
-    key = _key(spark, sf_dir)
-    if key in _ARCHIVE_MEMO:
-        return _ARCHIVE_MEMO[key]
     kind = ("archive",)
     loaded = artifact_store.load_group(spark, sf_dir, kind)
     if loaded is not None:
-        arch = _persist_dims(loaded[0])
-        _ARCHIVE_MEMO[key] = arch
-        return arch
+        return _persist_dims(loaded[0])
     arch = build_archive(spark, sf_dir)
     stored = artifact_store.save_group(
         spark, sf_dir, kind, arch, buckets=_ARCHIVE_BUCKETS
@@ -110,9 +123,7 @@ def get_archive(
     if stored:
         # the stored frames ARE bucketed-table reads: the build session
         # serves the same plans every later load session will
-        stored = _persist_dims(stored)
-        _ARCHIVE_MEMO[key] = stored
-        return stored
+        return _persist_dims(stored)
     if materialize:  # store disabled: per-session co-partition fallback
         arch = dict(arch)
         for name, (bucket_key, n) in _ARCHIVE_BUCKETS.items():
@@ -124,7 +135,6 @@ def get_archive(
         # force materialization now so first query isn't charged for it
         for df in arch.values():
             df.count()
-    _ARCHIVE_MEMO[key] = arch
     return arch
 
 
@@ -283,7 +293,6 @@ def build_wide_messages(archive: dict[str, DataFrame]) -> DataFrame:
     return wide
 
 
-@_locked
 def get_wide_messages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized wide view: lake twin + LAZY persist. The wide view is the
     hottest serving table (nine headline entries scan it, several with
@@ -293,38 +302,31 @@ def get_wide_messages(spark: SparkSession, sf_dir: str) -> DataFrame:
     wide consumer materializes it as a side effect and the other eight
     read memory (measured sf1 serving-cold: 9 entries × ~1s of re-scans
     → one ~2s build + 8 × ~0.15s)."""
+    return memo(spark, ("wide", sf_dir), lambda: _build_wide(spark, sf_dir))
+
+
+def _build_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     from msgvault_spark.sources import artifact_store
 
-    key = _key(spark, sf_dir)
-    if key in _WIDE_MEMO:
-        return _WIDE_MEMO[key]
     kind = ("wide_messages",)
     loaded = artifact_store.load_group(spark, sf_dir, kind)
     if loaded is not None:
-        wide = loaded[0]["wide"].persist(StorageLevel.MEMORY_AND_DISK)
-    else:
-        # build at few, larger partitions: the wide view is dimension-scale
-        # (≤ a few hundred MB at bench SFs) and every consumer is a
-        # scan+agg, so per-task scheduling dominates — 8 partitions keeps
-        # scans at 8 tasks instead of 32 (measured 25% off the 4 wide
-        # aggregates at sf0.1). The lake-persisted twin (build_wide_cache)
-        # sizes by year partition/file instead, which is the knob that
-        # matters on a real cluster.
-        built = build_wide_messages(get_archive(spark, sf_dir)).coalesce(8)
-        stored = artifact_store.save_group(spark, sf_dir, kind, {"wide": built})
-        if stored:
-            wide = stored["wide"].persist(StorageLevel.MEMORY_AND_DISK)
-        else:  # store disabled: in-session persist fallback
-            wide = built.persist(StorageLevel.MEMORY_AND_DISK)
-            wide.count()
-    _WIDE_MEMO[key] = wide
+        return loaded[0]["wide"].persist(StorageLevel.MEMORY_AND_DISK)
+    # build at few, larger partitions: the wide view is dimension-scale
+    # (≤ a few hundred MB at bench SFs) and every consumer is a
+    # scan+agg, so per-task scheduling dominates — 8 partitions keeps
+    # scans at 8 tasks instead of 32 (measured 25% off the 4 wide
+    # aggregates at sf0.1). The lake-persisted twin (build_wide_cache)
+    # sizes by year partition/file instead, which is the knob that
+    # matters on a real cluster.
+    built = build_wide_messages(get_archive(spark, sf_dir)).coalesce(8)
+    stored = artifact_store.save_group(spark, sf_dir, kind, {"wide": built})
+    if stored:
+        return stored["wide"].persist(StorageLevel.MEMORY_AND_DISK)
+    # store disabled: in-session persist fallback
+    wide = built.persist(StorageLevel.MEMORY_AND_DISK)
+    wide.count()
     return wide
-
-
-_TABLE_MEMO: dict[tuple[str, str, str], DataFrame] = {}
-_TEXT_INDEX_MEMO: dict[tuple[str, str, str, str, str], tuple[DataFrame, DataFrame]] = {}
-_CORPUS_STATS_MEMO: dict[tuple[str, str, str, str, str], tuple[int, float]] = {}
-_TERM_STATS_MEMO: dict[tuple[str, str, str, str, str], DataFrame] = {}
 
 
 # Tables at or above this raw-parquet footprint serve from a pre-sharded
@@ -374,7 +376,6 @@ def _layout_partitions(spark: SparkSession, n_rows: int, n_bytes: int | None) ->
     )
 
 
-@_locked
 def get_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Memoized testdata table (the raw-parquet analog of the reference
     keeping its DuckDB connection's buffer pool warm).
@@ -388,12 +389,15 @@ def get_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
       * small tables: repartitioned to ~100k-row partitions (capped at
         core count) and MEMORY_AND_DISK-persisted, so CPU-heavy consumers
         get full-width parallelism on data whose warm-in costs ms."""
+    return memo(
+        spark, ("table", sf_dir, name), lambda: _build_table(spark, sf_dir, name)
+    )
+
+
+def _build_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     from msgvault_spark.sources import artifact_store
     from msgvault_spark.sources.loader import load_table
 
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    if key in _TABLE_MEMO:
-        return _TABLE_MEMO[key]
     # size the layout from the parquet FOOTER (free) instead of a
     # full counting scan — at sf1 the old scan-count-then-repartition
     # sequence read lineitem twice before the first query could run
@@ -407,8 +411,7 @@ def get_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         kind = ("table_shards", name)
         loaded = artifact_store.load_group(spark, sf_dir, kind)
         if loaded is not None:
-            _TABLE_MEMO[key] = loaded[0]["data"]
-            return _TABLE_MEMO[key]
+            return loaded[0]["data"]
         bucket = _TWIN_BUCKETS.get(name)
         if bucket is not None:
             stored = artifact_store.save_group(
@@ -427,8 +430,7 @@ def get_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 {"data": load_table(spark, sf_dir, name).repartition(n_part)},
             )
         if stored is not None:
-            _TABLE_MEMO[key] = stored["data"]
-            return _TABLE_MEMO[key]
+            return stored["data"]
         # store disabled → fall through to the in-session cache path
     raw = load_table(spark, sf_dir, name)
     if n_rows is None:
@@ -442,8 +444,7 @@ def get_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     else:
         df = raw.persist(StorageLevel.MEMORY_AND_DISK)
         df.count()
-    _TABLE_MEMO[key] = df
-    return _TABLE_MEMO[key]
+    return df
 
 
 def _footer_rows(sf_dir: str, name: str) -> int | None:
@@ -491,44 +492,44 @@ def _footer_bytes(sf_dir: str, name: str) -> int | None:
     return None
 
 
-@_locked
 def get_text_index(
     spark: SparkSession, sf_dir: str, table: str, id_col: str, text_col: str
 ) -> tuple[DataFrame, DataFrame]:
     """Memoized persisted inverted index (postings, doc_stats) — the ETL-time
     FTS index the reference maintains as SQLite FTS5 tables."""
-    key = (spark.sparkContext.applicationId, sf_dir, table, id_col, text_col)
-    if key not in _TEXT_INDEX_MEMO:
-        _build_text_index(spark, key, sf_dir, table, id_col, text_col)
-    return _TEXT_INDEX_MEMO[key]
+    idx = _text_index(spark, sf_dir, table, id_col, text_col)
+    return idx["postings"], idx["stats"]
 
 
-@_locked
 def get_corpus_stats(
     spark: SparkSession, sf_dir: str, table: str, id_col: str, text_col: str
 ) -> tuple[int, float]:
     """(n_docs, avgdl) — corpus constants captured at index-build time so
     per-query BM25 folds them in as literals."""
-    key = (spark.sparkContext.applicationId, sf_dir, table, id_col, text_col)
-    if key not in _CORPUS_STATS_MEMO:
-        _build_text_index(spark, key, sf_dir, table, id_col, text_col)
-    return _CORPUS_STATS_MEMO[key]
+    idx = _text_index(spark, sf_dir, table, id_col, text_col)
+    return idx["n"], idx["avgdl"]
 
 
-@_locked
 def get_term_stats(
     spark: SparkSession, sf_dir: str, table: str, id_col: str, text_col: str
 ) -> DataFrame:
     """ETL-time (term, df) document-frequency table — the statistic an FTS
     index keeps next to its postings. Queries broadcast a filtered slice of
     it instead of re-aggregating candidate postings per query."""
-    key = (spark.sparkContext.applicationId, sf_dir, table, id_col, text_col)
-    if key not in _TERM_STATS_MEMO:
-        _build_text_index(spark, key, sf_dir, table, id_col, text_col)
-    return _TERM_STATS_MEMO[key]
+    return _text_index(spark, sf_dir, table, id_col, text_col)["term_stats"]
 
 
-def _build_text_index(spark, key, sf_dir, table, id_col, text_col) -> None:
+def _text_index(spark, sf_dir, table, id_col, text_col) -> dict:
+    """One registry entry per index: postings, stats and term_stats frames
+    plus the n/avgdl corpus scalars, built (or lake-loaded) together."""
+    return memo(
+        spark,
+        ("text_index", sf_dir, table, id_col, text_col),
+        lambda: _build_text_index(spark, sf_dir, table, id_col, text_col),
+    )
+
+
+def _build_text_index(spark, sf_dir, table, id_col, text_col) -> dict:
     from pyspark.sql import functions as F
 
     from msgvault_spark.search.fts import build_inverted_index
@@ -542,10 +543,7 @@ def _build_text_index(spark, key, sf_dir, table, id_col, text_col) -> None:
         # consumer filters postings to its query terms, and that predicate
         # pushes into the parquet scan — which the full-width cache blocked
         frames, scalars = loaded
-        _TEXT_INDEX_MEMO[key] = (frames["postings"], frames["stats"])
-        _TERM_STATS_MEMO[key] = frames["term_stats"]
-        _CORPUS_STATS_MEMO[key] = (int(scalars["n"]), float(scalars["avgdl"]))
-        return
+        return {**frames, "n": int(scalars["n"]), "avgdl": float(scalars["avgdl"])}
     postings, stats = build_inverted_index(
         get_table(spark, sf_dir, table), id_col, text_col
     )
@@ -565,31 +563,21 @@ def _build_text_index(spark, key, sf_dir, table, id_col, text_col) -> None:
     row = stats.agg(
         F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl")
     ).collect()[0]
+    frames = {"postings": postings, "stats": stats, "term_stats": term_stats}
+    scalars = {"n": int(row["n"]), "avgdl": float(row["avgdl"])}
     stored = artifact_store.save_group(
-        spark,
-        sf_dir,
-        kind,
-        {"postings": postings, "stats": stats, "term_stats": term_stats},
-        scalars={"n": int(row["n"]), "avgdl": float(row["avgdl"])},
+        spark, sf_dir, kind, frames, scalars=scalars
     )
     if stored:
         # serve the parquet-backed copies so the build session and every
         # later load session produce IDENTICAL downstream plans (and the
         # served bits are the lake bits)
-        for df in (postings, stats, term_stats):
+        for df in frames.values():
             df.unpersist()
-        postings = stored["postings"]
-        stats = stored["stats"]
-        term_stats = stored["term_stats"]
-    _TEXT_INDEX_MEMO[key] = (postings, stats)
-    _TERM_STATS_MEMO[key] = term_stats
-    _CORPUS_STATS_MEMO[key] = (int(row["n"]), float(row["avgdl"]))
+        frames = stored
+    return {**frames, **scalars}
 
 
-_ARTIFACT_MEMO: dict[tuple, DataFrame] = {}
-
-
-@_locked
 def get_artifact(spark: SparkSession, cache_key: tuple, builder) -> DataFrame:
     """Generic memoized persisted ETL artifact — the build-cache pattern
     (reference cmd/build_cache.go) for any query-independent derived frame
@@ -597,12 +585,13 @@ def get_artifact(spark: SparkSession, cache_key: tuple, builder) -> DataFrame:
     per-user rollups, normed vectors. Built + persisted once per
     (application, key); queries then scan the artifact instead of
     re-deriving it."""
-    key = (spark.sparkContext.applicationId, *cache_key)
-    if key not in _ARTIFACT_MEMO:
-        _ARTIFACT_MEMO[key] = _disk_backed(
+    return memo(
+        spark,
+        ("artifact", *cache_key),
+        lambda: _disk_backed(
             spark, cache_key, ("artifact", *cache_key[1:]), builder
-        )
-    return _ARTIFACT_MEMO[key]
+        ),
+    )
 
 
 def _disk_backed(
@@ -635,34 +624,26 @@ def _disk_backed(
     return df
 
 
-_SCALAR_MEMO: dict[tuple, object] = {}
-
-
-@_locked
 def get_scalar(spark: SparkSession, cache_key: tuple, compute):
     """Memoized scalar catalog statistic captured at build time (the
     corpus_stats pattern: n_docs/avgdl for BM25, distinct-group counts
     for the wide aggregates) — queries fold the value in as a literal
     instead of paying a 1-row aggregate job per invocation."""
-    key = (spark.sparkContext.applicationId, *cache_key)
-    if key not in _SCALAR_MEMO:
+
+    def build():
         from msgvault_spark.sources import artifact_store
 
         kind = ("scalar", *cache_key[1:])
         stored = artifact_store.load_scalars(cache_key[0], kind)
         if stored is not None and "value" in stored:
-            _SCALAR_MEMO[key] = stored["value"]
-        else:
-            value = compute()
-            artifact_store.save_scalars(cache_key[0], kind, {"value": value})
-            _SCALAR_MEMO[key] = value
-    return _SCALAR_MEMO[key]
+            return stored["value"]
+        value = compute()
+        artifact_store.save_scalars(cache_key[0], kind, {"value": value})
+        return value
+
+    return memo(spark, ("scalar", *cache_key), build)
 
 
-_COMPONENTS_MEMO: dict[tuple, DataFrame] = {}
-
-
-@_locked
 def get_components(
     spark: SparkSession, cache_key: tuple, edges_builder, **params
 ) -> DataFrame:
@@ -673,22 +654,19 @@ def get_components(
     instead of re-running the iterative fixpoint per invocation."""
     from msgvault_spark.dedup.components import connected_components
 
-    key = (spark.sparkContext.applicationId, *cache_key, *sorted(params.items()))
-    if key not in _COMPONENTS_MEMO:
-        kind = ("components", *cache_key[1:], *sorted(params.items()))
-        _COMPONENTS_MEMO[key] = _disk_backed(
+    p = sorted(params.items())
+    return memo(
+        spark,
+        ("components", *cache_key, *p),
+        lambda: _disk_backed(
             spark,
             cache_key,
-            kind,
+            ("components", *cache_key[1:], *p),
             lambda: connected_components(edges_builder(), **params),
-        )
-    return _COMPONENTS_MEMO[key]
+        ),
+    )
 
 
-_MINHASH_MEMO: dict[tuple, DataFrame] = {}
-
-
-@_locked
 def get_minhash_index(
     spark: SparkSession,
     cache_key: tuple,
@@ -702,69 +680,49 @@ def get_minhash_index(
     queries pay only candidate-join + verify."""
     from msgvault_spark.dedup.minhash import build_minhash_index
 
-    key = (spark.sparkContext.applicationId, *cache_key, *sorted(params.items()))
-    if key not in _MINHASH_MEMO:
-        kind = (
-            "minhash_index",
-            *cache_key[1:],
-            id_col,
-            text_col,
-            *sorted(params.items()),
-        )
-        _MINHASH_MEMO[key] = _disk_backed(
+    p = sorted(params.items())
+    return memo(
+        spark,
+        ("minhash_index", *cache_key, *p),
+        lambda: _disk_backed(
             spark,
             cache_key,
-            kind,
+            ("minhash_index", *cache_key[1:], id_col, text_col, *p),
             lambda: build_minhash_index(df_builder(), id_col, text_col, **params),
-        )
-    return _MINHASH_MEMO[key]
+        ),
+    )
 
 
-def _unpersist_tree(obj) -> int:
-    """Unpersist every DataFrame reachable inside obj (DFs, dicts,
-    tuples/lists of them). blocking=True: callers are memory-pressure
-    recovery, which needs the blocks actually gone before retrying."""
-    n = 0
+def _frames(obj):
+    """Every DataFrame reachable inside obj (DFs, dicts, tuples/lists)."""
     if isinstance(obj, DataFrame):
-        try:
-            obj.unpersist(blocking=True)
-            n += 1
-        except Exception:
-            pass
+        yield obj
     elif isinstance(obj, dict):
         for v in obj.values():
-            n += _unpersist_tree(v)
+            yield from _frames(v)
     elif isinstance(obj, (tuple, list)):
         for v in obj:
-            n += _unpersist_tree(v)
-    return n
+            yield from _frames(v)
 
 
-@_locked
 def clear_serving_caches() -> int:
     """Memory-pressure recovery level 2 (cold-restart-without-process-
-    restart): drop every long-lived serving cache this module holds —
-    the persisted archive twins, wide view, sharded tables, FTS/term
-    indexes, generic artifacts, components and minhash labelings. Each
-    getter rebuilds lazily from the artifact lake on next use, so the
-    only cost is the next consumer's re-warm; the benefit is a driver
-    heap no longer carrying every entry ever served this session.
-    Returns the number of memo entries dropped. Scalar memos stay: they
-    hold bytes, not relations."""
-    dropped = 0
-    for memo in (
-        _ARCHIVE_MEMO,
-        _WIDE_MEMO,
-        _TABLE_MEMO,
-        _TEXT_INDEX_MEMO,
-        _TERM_STATS_MEMO,
-        _ARTIFACT_MEMO,
-        _COMPONENTS_MEMO,
-        _MINHASH_MEMO,
-        _CORPUS_STATS_MEMO,  # scalars, but lifecycle-tied to the index
-    ):
-        for v in memo.values():
-            _unpersist_tree(v)
-        dropped += len(memo)
-        memo.clear()
-    return dropped
+    restart): drop every registry entry whose value holds a DataFrame —
+    the persisted archive twins, wide view, sharded tables, FTS/ANN
+    indexes, generic artifacts, components and minhash labelings — and
+    unpersist its frames (blocking: recovery needs the blocks actually
+    gone before retrying). Each getter rebuilds lazily from the artifact
+    lake on next use, so the only cost is the next consumer's re-warm;
+    the benefit is a driver heap no longer carrying every entry ever
+    served this session. Scalar, list and path entries stay: they hold
+    bytes, not relations. Returns the number of entries dropped."""
+    with _REGISTRY_LOCK:
+        held = [k for k, v in _REGISTRY.items() if any(True for _ in _frames(v))]
+        dropped = [_REGISTRY.pop(k) for k in held]
+    for value in dropped:
+        for df in _frames(value):
+            try:
+                df.unpersist(blocking=True)
+            except Exception:
+                pass
+    return len(dropped)

@@ -50,8 +50,10 @@ from pyspark.sql import types as T
 # (the new view's plan is force-analyzed before the old one is dropped, so
 # an in-flight consumer of the old DataFrame keeps working: a resolved
 # memory-sink plan holds the sink object, not the catalog name).
+# The pools stay outside the session-cache registry (sources/cache.py):
+# they own temp views and a checkpoint dir, not just memoized values.
 # clear_stream_pools() drops everything; catalog.clear_session_caches
-# (memory-recovery level 2) calls it.
+# (memory-recovery level 2) calls it after clearing the registry.
 # ---------------------------------------------------------------------------
 
 _CKPT_ROOT: str | None = None

@@ -27,6 +27,16 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+def _forget(namespace):
+    """Fresh serving session analog: drop one namespace's entries from the
+    session-cache registry (no unpersist — the frames stay valid)."""
+    from msgvault_spark.sources import cache
+
+    with cache._REGISTRY_LOCK:
+        for k in [k for k in cache._REGISTRY if k[1] == namespace]:
+            del cache._REGISTRY[k]
+
+
 def test_group_roundtrip_bits(spark, store):
     built = spark.range(10).selectExpr(
         "id", "id * 2 AS twice", "CAST(id AS STRING) AS s"
@@ -124,7 +134,7 @@ def test_archive_serving_is_scan_only(spark, store):
     from msgvault_spark.sources import cache
 
     cache.get_archive(spark, SF)  # ETL pass (writes the group)
-    cache._ARCHIVE_MEMO.clear()  # fresh serving session analog
+    _forget("archive")
     arch = cache.get_archive(spark, SF)
     plan = arch["messages"]._jdf.queryExecution().executedPlan().toString()
     assert "FileScan parquet" in plan and "aspark_" in plan
@@ -191,17 +201,15 @@ def test_half_written_group_never_loads(spark, store):
 
 def test_text_index_served_from_lake_matches_built(spark, store):
     """End-to-end through sources/cache: build the documents FTS index
-    (writes the lake group), wipe the in-session memos to simulate a fresh
+    (writes the lake group), forget the registry entry to simulate a fresh
     serving session, reload — postings/stats/scalars must be identical and
     the store must actually be hit (no rebuild)."""
     from msgvault_spark.sources import cache
 
-    # earlier tests may have warmed the in-session memo under the
+    # earlier tests may have warmed the registry entry under the
     # conftest-wide store; clear it so the BUILD happens into THIS
     # test's fresh store fixture
-    cache._TEXT_INDEX_MEMO.clear()
-    cache._TERM_STATS_MEMO.clear()
-    cache._CORPUS_STATS_MEMO.clear()
+    _forget("text_index")
 
     postings1, stats1 = cache.get_text_index(
         spark, SF, "documents", "doc_id", "text"
@@ -212,9 +220,7 @@ def test_text_index_served_from_lake_matches_built(spark, store):
         spark, SF, ("text_index", "documents", "doc_id", "text")
     ) is not None
 
-    cache._TEXT_INDEX_MEMO.clear()
-    cache._TERM_STATS_MEMO.clear()
-    cache._CORPUS_STATS_MEMO.clear()
+    _forget("text_index")
 
     def boom(*a, **k):  # the lake must satisfy the reload
         raise AssertionError("rebuilt instead of loading the lake artifact")
@@ -247,7 +253,7 @@ def test_get_artifact_served_from_lake(spark, store):
         return spark.range(5).selectExpr("id", "id % 2 AS parity")
 
     df1 = cache.get_artifact(spark, (SF, "unit_lake_artifact"), build)
-    cache._ARTIFACT_MEMO.clear()  # fresh serving session analog
+    _forget("artifact")
     df2 = cache.get_artifact(spark, (SF, "unit_lake_artifact"), build)
     assert calls == [1]
     assert _rows(df1) == _rows(df2)
